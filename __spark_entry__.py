@@ -43,9 +43,9 @@ GOLDEN_COLS = ["conv_id", "turn_idx", "kind", "extracted", "spans_json"]
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline on /root/testdata/sf0.001."""
-    from text_ocr_spark.pipeline import run_extraction
+    from text_ocr_spark.pipeline import extract_corpus, ordered
 
-    out = run_extraction(spark, "/root/testdata/sf0.001")
+    out = ordered(extract_corpus(spark, "/root/testdata/sf0.001"))
     return out.select(*GOLDEN_COLS)
 
 
@@ -54,9 +54,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from text_ocr_spark.pipeline import run_extraction
+    from text_ocr_spark.pipeline import extract_corpus, ordered
 
-    return run_extraction(spark, sf_dir).select(*GOLDEN_COLS)
+    return ordered(extract_corpus(spark, sf_dir)).select(*GOLDEN_COLS)
 
 
 def _extract_kind_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

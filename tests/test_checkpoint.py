@@ -114,9 +114,9 @@ def test_chunk_definitions_agree(spark):
 
     from tests.conftest import SF_TINY
     from text_ocr_spark.checkpoint import chunk_col
-    from text_ocr_spark.pipeline import _conv_id_expr, conv_chunk_expr
+    from text_ocr_spark.pipeline import conv_chunk_expr, conv_id_expr
 
     docs = spark.read.parquet(f"{SF_TINY}/documents.parquet").select("doc_id")
-    df = docs.withColumn("conv_id", _conv_id_expr(F.col("doc_id")))
+    df = docs.withColumn("conv_id", conv_id_expr(F.col("doc_id")))
     for n in (2, 4, 8, 16):
         assert df.where(chunk_col(n) != conv_chunk_expr(n)).count() == 0

@@ -270,3 +270,47 @@ def test_zero_gram_docs_score_biases(spark):
         assert out[d].n_grams == 0
         assert out[d].lang_pred == best[0]
         assert out[d].z_micro == best[1]
+
+
+def test_rejects_doubled_feature_rows(spark):
+    """A weight table that repeats a (lang, b) feature row (e.g. two
+    model tables concatenated) raises instead of summing the copies in
+    the per-language pivot."""
+    from text_ocr_spark.ops.lang_clf import langid_classify
+
+    docs = spark.createDataFrame([(1, "hello")], "doc_id long, text string")
+    w = spark.read.parquet(LANGID_WEIGHTS)
+    doubled = w.unionByName(w.where((F.col("b") != -1) & (F.col("lang") == "en")))
+    with pytest.raises(ValueError, match=r"repeats \(lang, b\) rows"):
+        langid_classify(docs, doubled)
+
+
+def test_lowercasing_across_engines(spark):
+    """The featurizer lowercases with Spark's F.lower, the committed
+    golden replays it with Python's str.lower, and DuckDB's lower is
+    the SQL oracle's. Pinned on the code points where full and simple
+    case mappings part: Spark and Python map dotted capital I to
+    'i' + U+0307 (two chars, so one more char-3-gram), DuckDB maps it
+    to a bare 'i'; capital sharp s, sharp s and fullwidth A agree."""
+    import duckdb
+
+    from text_ocr_spark.ops.lang_clf import char_ngram_occurrences
+
+    cases = {
+        "\u0130": ("i\u0307", "i"),  # LATIN CAPITAL LETTER I WITH DOT ABOVE
+        "\u00df": ("\u00df", "\u00df"),  # LATIN SMALL LETTER SHARP S
+        "\u1e9e": ("\u00df", "\u00df"),  # LATIN CAPITAL LETTER SHARP S
+        "\uff21": ("\uff41", "\uff41"),  # FULLWIDTH LATIN CAPITAL LETTER A
+    }
+    src = list(cases)
+    df = spark.createDataFrame([(s,) for s in src], "t string")
+    got_spark = [r[0] for r in df.select(F.lower("t")).collect()]
+    got_duck = [duckdb.execute("SELECT lower(?)", [s]).fetchone()[0] for s in src]
+    assert got_spark == [s.lower() for s in src] == [v[0] for v in cases.values()]
+    assert got_duck == [v[1] for v in cases.values()]
+
+    # the divergence reaches the features: '\u0130ab' is 4 chars after
+    # lowering, so Spark emits the same 2 buckets as the Python replay
+    doc = spark.createDataFrame([(1, "\u0130ab")], "doc_id long, text string")
+    buckets = sorted(r.b for r in char_ngram_occurrences(doc, B_SMALL).collect())
+    assert buckets == sorted(_grams("\u0130ab", B_SMALL)) and len(buckets) == 2

@@ -14,9 +14,9 @@ GOLDEN_COLS = ["conv_id", "turn_idx", "kind", "extracted", "spans_json"]
 
 @pytest.fixture(scope="module")
 def extracted_spark(spark) -> pd.DataFrame:
-    from text_ocr_spark.pipeline import run_extraction
+    from text_ocr_spark.pipeline import extract_corpus, ordered
 
-    out = run_extraction(spark, SF_TINY)
+    out = ordered(extract_corpus(spark, SF_TINY))
     return out.select(*GOLDEN_COLS).toPandas()
 
 
@@ -158,28 +158,23 @@ def test_with_span_structs_typed(spark):
         assert all(0 <= s.start <= s.end for s in r.spans)
 
 
-def test_extract_corpus_windowing_knobs(spark):
-    """B2/D6 knobs surface at the pipeline API: tiny max_chars still
-    yields one row per turn with valid raw spans; defaults are
-    golden-exact (covered by the contract), pad_frac only widens spans."""
-    from pyspark.sql import functions as F
+def test_turn_doc_id_inverts_the_transcript_key(spark):
+    """curate.turn_doc_id inverts the (conv_id, turn_idx) key that
+    curate.inverse_turn_key (pipeline.conv_id_expr / turn_idx_expr)
+    derives from doc_id, and that key equals the Python oracle
+    fixtures.conv_of: hot-key edges 0 and 99, the first numbered
+    conversation (100, 107), the next one (108) and a bench ``repeat``
+    replica id (doc_id + r * 10^7)."""
+    from text_ocr_spark.fixtures import conv_of
+    from text_ocr_spark.ops.curate import inverse_turn_key, turn_doc_id
 
-    from text_ocr_spark.pipeline import extract_corpus
-
-    sf = "/root/testdata/sf0.001"
-    base = extract_corpus(spark, sf, num_partitions=8)
-    windowed = extract_corpus(
-        spark, sf, num_partitions=8, max_chars=2000, pad_frac=0.15
+    ids = [0, 99, 100, 107, 108, 10_000_107]
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    got = (
+        docs.select("doc_id", *inverse_turn_key())
+        .select("doc_id", "conv_id", "turn_idx", turn_doc_id().alias("back"))
+        .orderBy("doc_id")
+        .collect()
     )
-    nb, nw = base.count(), windowed.count()
-    assert nb == nw == 500  # one row per turn, always
-    # windowing only affects oversized payloads: small ones identical
-    b = {
-        (r.conv_id, r.turn_idx): (r.kind, r.extracted)
-        for r in base.filter(F.col("bytes_in") < 1500).collect()
-    }
-    w = {
-        (r.conv_id, r.turn_idx): (r.kind, r.extracted)
-        for r in windowed.filter(F.col("bytes_in") < 1500).collect()
-    }
-    assert b == w and len(b) > 300
+    assert [(r.conv_id, r.turn_idx) for r in got] == [conv_of(i)[:2] for i in ids]
+    assert [r.back for r in got] == ids

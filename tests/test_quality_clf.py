@@ -296,3 +296,22 @@ def test_quality_clf_rejects_bad_weight_tables(spark, corpus):
     doubled = w.unionByName(w.where(F.col("b") == -1))
     with pytest.raises(ValueError, match="exactly one bias row"):
         quality_classify(docs, doubled, n_buckets=B)
+
+
+def test_quality_clf_rejects_doubled_feature_rows(spark, corpus):
+    """A weight table that repeats a feature bucket (e.g. two model
+    tables concatenated) raises: the classify join would emit each
+    matching occurrence once per copy, inflating n_tokens and s_micro."""
+    from text_ocr_spark.ops.quality_clf import (
+        quality_classify,
+        quality_train,
+    )
+
+    docs, _ = corpus
+    pos = docs.where(F.col("doc_id") % 11 == 0)
+    neg = docs.where((F.col("doc_id") % 11 != 0) & (F.col("doc_id") % 3 == 0))
+    w = quality_train(pos, neg, n_buckets=B, iters=1)
+
+    doubled = w.unionByName(w.where(F.col("b") != -1))
+    with pytest.raises(ValueError, match=r"repeats \(b\) rows"):
+        quality_classify(docs, doubled, n_buckets=B)

@@ -305,8 +305,8 @@ def pack_shards(
 def turn_doc_id() -> F.Column:
     """Reconstruct the source documents.doc_id from an extracted turn's
     (conv_id, turn_idx) — the inverse of the transcript builder's
-    mapping (conv-skew carries doc_ids 0..99 as turn_idx; conv-%06d
-    number c carries 100 + 8c + turn_idx). A pure expression on the row
+    mapping (conv-skew carries doc_ids 0..99 as turn_idx; numbered
+    conversation c carries 100 + 8c + turn_idx). A pure expression on the row
     key, so both engines compute the identical id with no join."""
     return (
         F.when(
@@ -327,20 +327,10 @@ def inverse_turn_key() -> list[F.Column]:
     expressions of doc_id, so the final packing segment never has to
     join back through the extraction subtree just to re-attach the
     turn key."""
-    skew = F.col("doc_id") < 100
-    return [
-        F.when(skew, F.lit("conv-skew"))
-        .otherwise(
-            F.format_string(
-                "conv-%06d", ((F.col("doc_id") - 100) / 8).cast("long")
-            )
-        )
-        .alias("conv_id"),
-        F.when(skew, F.col("doc_id"))
-        .otherwise((F.col("doc_id") - 100) % 8)
-        .cast("int")
-        .alias("turn_idx"),
-    ]
+    from text_ocr_spark.pipeline import conv_id_expr, turn_idx_expr
+
+    d = F.col("doc_id")
+    return [conv_id_expr(d).alias("conv_id"), turn_idx_expr(d).alias("turn_idx")]
 
 
 def _pretrain_gate(spark: SparkSession, sf_dir: str) -> DataFrame:

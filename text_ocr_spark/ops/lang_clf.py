@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from text_ocr_spark.ops.dsir import _hash_bucket
-from text_ocr_spark.ops.quality_clf import quality_train
+from text_ocr_spark.ops.quality_clf import checked_bias_rows, quality_train
 
 #: hashed char-3-gram feature buckets (lang-id needs far fewer than a
 #: topical classifier — fastText's lang-id models are tiny)
@@ -166,17 +166,11 @@ def langid_classify(
     count, lang_pred = argmax language (ties -> lexicographically
     first), z_micro = the winning exact int64 micro logit. Zero-gram
     docs score the biases alone. Raises on a weight table whose bias
-    rows are missing or duplicated for any language (the
+    rows are missing or duplicated for any language, or that repeats a
+    (lang, b) feature row — the pivot below would sum the copies (the
     quality_classify ADVICE discipline)."""
-    bias_rows = weights.where(F.col("b") == -1).select(
-        "lang", "w_micro"
-    ).collect()
+    bias_rows = checked_bias_rows(weights, ("lang", "b"), "langid_classify")
     langs = sorted(r["lang"] for r in bias_rows)
-    if not langs or len(set(langs)) != len(langs):
-        raise ValueError(
-            "langid_classify: weight table must contain exactly one "
-            f"bias row (b == -1) per language; got {langs}"
-        )
     bias = {r["lang"]: int(r["w_micro"]) for r in bias_rows}
 
     # pivot the weight table to one column per language so the corpus

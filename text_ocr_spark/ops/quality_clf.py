@@ -198,6 +198,34 @@ def _half_up(x: float) -> int:
     return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
 
 
+def checked_bias_rows(weights: DataFrame, keys: tuple[str, ...], op: str) -> list:
+    """Validate a (keys..., w_micro) weight table in ONE bounded driver
+    action on the model table and return its bias rows (b == -1).
+
+    Raises ValueError unless there is at least one bias row and no
+    ``keys`` value occurs twice — a classify join or pivot would count
+    a repeated row twice."""
+    rows = (
+        weights.groupBy(*keys)
+        .agg(F.count("*").alias("n"), F.first("w_micro").alias("w_micro"))
+        .where((F.col("b") == -1) | (F.col("n") > 1))
+        .collect()
+    )
+    bias = [r for r in rows if r["b"] == -1]
+    if not bias or any(r["n"] > 1 for r in bias):
+        raise ValueError(
+            f"{op}: weight table must contain exactly one bias row "
+            f"(b == -1) per model; found {[(r[keys[0]], r['n']) for r in bias]}"
+        )
+    dups = sorted(tuple(r[k] for k in keys) for r in rows if r["n"] > 1)
+    if dups:
+        raise ValueError(
+            f"{op}: weight table repeats ({', '.join(keys)}) rows "
+            f"{dups[:5]} ({len(dups)} keys)"
+        )
+    return bias
+
+
 def quality_classify(
     docs: DataFrame,
     weights: DataFrame,
@@ -212,18 +240,11 @@ def quality_classify(
     Zero-token docs score the bias alone.
     """
     # validate the weight table up front (ADVICE r4): this is the
-    # public apply API, and a missing bias row would otherwise yield
-    # ZERO output rows (crossJoin with empty) while a duplicated one
-    # (e.g. a concatenated weight table) would silently multiply every
-    # row. take(2) is a bounded driver action on the model table.
-    bias_rows = weights.where(F.col("b") == -1).select("w_micro").take(2)
-    if len(bias_rows) != 1:
-        raise ValueError(
-            "quality_classify: weight table must contain exactly one "
-            f"bias row (b == -1); found {len(bias_rows)}"
-            + (" or more" if len(bias_rows) == 2 else "")
-        )
-    w0_micro = int(bias_rows[0][0])
+    # public apply API, and a repeated row (e.g. a concatenated weight
+    # table) would otherwise match each occurrence twice in the left
+    # join below, inflating n_tokens and s_micro
+    (bias_row,) = checked_bias_rows(weights, ("b",), "quality_classify")
+    w0_micro = int(bias_row["w_micro"])
     wtab = weights.where(F.col("b") != -1)
     # ONE corpus tokenize pass: a LEFT join keeps unweighted
     # occurrences (buckets unseen in training score 0 but still count

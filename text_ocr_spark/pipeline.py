@@ -7,8 +7,8 @@ Physical plan (SURVEY.md §3.4):
          (explicit skew handling, SURVEY.md §2.H — extraction is per-turn
          independent so salting is safe; AQE alone doesn't split a hot
          groupBy key that never aggregates)
-      -> ArrowEvalPython: mapInPandas(extract_batch) — kernels over Arrow
-         batches, per-payload numpy, no per-row Python UDFs
+      -> MapInPandas: _extract_batches / _build_extract_batches, both over
+         the one per-turn loop _extract_turns (no per-row Python UDFs)
       -> (optional) Exchange+Sort: range partition by (conv_id, turn_idx)
          for the stable-turn-ordering contract
 
@@ -26,15 +26,16 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from functools import partial
 from typing import Any
 
 import pandas as pd
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from text_ocr_spark.fixtures import build_payload
+from text_ocr_spark.fixtures import build_payload, build_vertical
 from text_ocr_spark.kernels.extract import extract_payload
 from text_ocr_spark.oracle import spans_to_json
 
@@ -100,15 +101,8 @@ def session_builder(
 
 def _gen_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        texts: list[Any] = []
-        tools: list[Any] = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload, tool = build_payload(int(doc_id), text or "")
-            texts.append(payload)
-            tools.append(tool)
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "text": texts, "tool": tools}
-        )
+        payloads, tools = _build_turns(pdf["doc_id"], pdf["text"], build_payload)
+        yield pd.DataFrame({"doc_id": pdf["doc_id"], "text": payloads, "tool": tools})
 
 
 def build_transcripts(
@@ -159,14 +153,17 @@ def _read_docs(spark: SparkSession, sf_dir: str, repeat: int) -> DataFrame:
     return docs
 
 
-def _conv_id_expr(d: F.Column) -> F.Column:
-    conv_k = F.floor((d - 100) / 8)
+def conv_id_expr(d: F.Column) -> F.Column:
+    """conv_id as a pure expression of doc_id (fixtures.conv_of): doc_ids
+    below 100 share the hot ``conv-skew`` conversation, the rest form
+    numbered 8-turn conversations."""
     return F.when(d < 100, F.lit("conv-skew")).otherwise(
-        F.format_string("conv-%06d", conv_k)
+        F.format_string("conv-%06d", F.floor((d - 100) / 8))
     )
 
 
-def _turn_idx_expr(d: F.Column) -> F.Column:
+def turn_idx_expr(d: F.Column) -> F.Column:
+    """turn_idx as a pure expression of doc_id (fixtures.conv_of)."""
     return F.when(d < 100, d).otherwise((d - 100) % 8).cast("int")
 
 
@@ -174,12 +171,10 @@ def _with_transcript_meta(df: DataFrame) -> DataFrame:
     """Attach conv_id/turn_idx/role/ts derived from doc_id (JVM-side,
     SQL-expressible — the DuckDB oracle rebuilds the same expressions)."""
     d = F.col("doc_id")
-    conv_k = F.floor((d - 100) / 8)
-    turn_idx = _turn_idx_expr(d)
-    conv_ord = F.when(d < 100, F.lit(0)).otherwise(conv_k + 1)
+    conv_ord = F.when(d < 100, F.lit(0)).otherwise(F.floor((d - 100) / 8) + 1)
     return (
-        df.withColumn("conv_id", _conv_id_expr(d))
-        .withColumn("turn_idx", turn_idx)
+        df.withColumn("conv_id", conv_id_expr(d))
+        .withColumn("turn_idx", turn_idx_expr(d))
         .withColumn(
             "role",
             F.element_at(
@@ -187,7 +182,6 @@ def _with_transcript_meta(df: DataFrame) -> DataFrame:
                 (F.col("turn_idx") % 3) + 1,
             ),
         )
-        .withColumn("conv_ord", conv_ord)
         # epoch arithmetic, not timestamp literals: session-TZ-proof
         # (1767225600 = 2026-01-01T00:00:00Z, fixtures.EPOCH). conv_ord is
         # bounded mod 1e6 so bench `repeat` replicas (doc_id + r*10^7) stay
@@ -196,11 +190,10 @@ def _with_transcript_meta(df: DataFrame) -> DataFrame:
             "ts",
             F.timestamp_seconds(
                 F.lit(1767225600)
-                + (F.col("conv_ord") % 1_000_000) * 3600
+                + (conv_ord % 1_000_000) * 3600
                 + F.col("turn_idx")
             ),
         )
-        .drop("conv_ord")
     )
 
 
@@ -208,37 +201,61 @@ def _with_transcript_meta(df: DataFrame) -> DataFrame:
 # extraction stage
 # --------------------------------------------------------------------------
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+_TURN_COLS = ["kind", "extracted", "spans_json", "bytes_in", "bytes_out"]
+
+
+def _build_turns(
+    doc_ids: Iterable[Any], texts: Iterable[Any], builder: Callable[[int, str], Any]
+) -> tuple[list[str | None], list[str | None]]:
+    """(doc_id, text) rows -> (payloads, tools) through a fixtures
+    builder (a pure function of doc_id and text, order independent)."""
+    payloads: list[str | None] = []
+    tools: list[str | None] = []
+    for doc_id, text in zip(doc_ids, texts):
+        payload, tool = builder(int(doc_id), text or "")
+        payloads.append(payload)
+        tools.append(tool)
+    return payloads, tools
+
+
+def _vertical_turn(doc_id: int, text: str) -> tuple[str, None]:
+    return build_vertical(doc_id, text), None
+
+
+def _null(v: Any) -> Any:
+    """Arrow nulls surface in pandas as None or NaN; the kernels take None."""
+    return None if v is None or (isinstance(v, float) and pd.isna(v)) else v
+
+
+def _extract_turns(payloads: Iterable[Any], tools: Iterable[Any]) -> dict[str, list]:
+    """(payload, tool) per turn -> the _TURN_COLS columns."""
+    out: dict[str, list] = {c: [] for c in _TURN_COLS}
+    kinds, texts, spans_json, bytes_in, bytes_out = out.values()
+    for payload, tool in zip(payloads, tools):
+        payload = _null(payload)
+        kind, extracted, spans = extract_payload(payload, _null(tool))
+        kinds.append(kind)
+        texts.append(extracted)
+        spans_json.append(spans_to_json(spans))
+        bytes_in.append(len(payload.encode("utf-8")) if payload else 0)
+        bytes_out.append(len(extracted.encode("utf-8")))
+    return out
+
+
+def _partition_id() -> int:
     tc = TaskContext.get()
-    pid = tc.partitionId() if tc is not None else -1
+    return tc.partitionId() if tc is not None else -1
+
+
+def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """extract_transcripts' Arrow stage: transcript rows -> extracted rows."""
+    pid = _partition_id()
     for pdf in batches:
-        kinds: list[str] = []
-        texts: list[str] = []
-        spans_json: list[str] = []
-        bytes_in: list[int] = []
-        bytes_out: list[int] = []
-        for text, tool in zip(pdf["text"], pdf["tool"]):
-            t = None if text is None or (isinstance(text, float) and pd.isna(text)) else text
-            tl = None if tool is None or (isinstance(tool, float) and pd.isna(tool)) else tool
-            kind, extracted, spans = extract_payload(t, tl)
-            kinds.append(kind)
-            texts.append(extracted)
-            spans_json.append(spans_to_json(spans))
-            bytes_in.append(len(t.encode("utf-8")) if t else 0)
-            bytes_out.append(len(extracted.encode("utf-8")))
         yield pd.DataFrame(
             {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"],
-                "role": pdf["role"],
-                "tool": pdf["tool"],
-                "ts": pdf["ts"],
-                "kind": kinds,
-                "extracted": texts,
-                "spans_json": spans_json,
+                **{c: pdf[c] for c in ("conv_id", "turn_idx", "role", "tool", "ts")},
+                **_extract_turns(pdf["text"], pdf["tool"]),
                 "part_id": pid,
-                "bytes_in": bytes_in,
-                "bytes_out": bytes_out,
             }
         )
 
@@ -255,8 +272,7 @@ def extract_transcripts(
     before the Arrow stage defuses long-conversation skew (SURVEY.md §2.H);
     the Window/sort that restores ordering runs on unsalted keys afterwards.
     """
-    cols = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
-    narrow = df.select(*cols)
+    narrow = df.select("conv_id", "turn_idx", "role", "tool", "ts", "text")
     salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
     if num_partitions:
         salted = narrow.repartition(num_partitions, F.col("conv_id"), salt)
@@ -265,54 +281,27 @@ def extract_transcripts(
     return salted.mapInPandas(_extract_batches, schema=EXTRACT_SCHEMA)
 
 
-def _gen_extract_batches_fn(max_chars: int | None, pad_frac: float):
-    """Fused payload-build + extraction (single Arrow stage), with the
-    B2 window bound and D6 padding flag captured in the closure.
+def _build_extract_batches(
+    batches: Iterator[pd.DataFrame], builder: Callable[[int, str], Any] = build_payload
+) -> Iterator[pd.DataFrame]:
+    """Fused payload-build + extraction (single Arrow stage).
 
     Input is deliberately just (doc_id, text): every other transcript
     column (conv_id/turn_idx/role/ts) is a pure JVM expression on doc_id
     attached AFTER this stage — strings/timestamps that merely pass
     through a pandas UDF cost Arrow+object conversion for nothing.
     """
-    from text_ocr_spark.kernels.constants import MAX_ANALYSIS_CHARS
-
-    mc = MAX_ANALYSIS_CHARS if max_chars is None else max_chars
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            tools: list[Any] = []
-            kinds: list[str] = []
-            texts: list[str] = []
-            spans_json: list[str] = []
-            bytes_in: list[int] = []
-            bytes_out: list[int] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload, tool = build_payload(int(doc_id), text or "")
-                kind, extracted, spans = extract_payload(
-                    payload, tool, max_chars=mc, pad_frac=pad_frac
-                )
-                tools.append(tool)
-                kinds.append(kind)
-                texts.append(extracted)
-                spans_json.append(spans_to_json(spans))
-                bytes_in.append(len(payload.encode("utf-8")) if payload else 0)
-                bytes_out.append(len(extracted.encode("utf-8")))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "tool": tools,
-                    "kind": kinds,
-                    "extracted": texts,
-                    "spans_json": spans_json,
-                    "part_id": pid,
-                    "bytes_in": bytes_in,
-                    "bytes_out": bytes_out,
-                }
-            )
-
-    return gen
+    pid = _partition_id()
+    for pdf in batches:
+        payloads, tools = _build_turns(pdf["doc_id"], pdf["text"], builder)
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "tool": tools,
+                **_extract_turns(payloads, tools),
+                "part_id": pid,
+            }
+        )
 
 
 _FUSED_SCHEMA = (
@@ -330,7 +319,7 @@ def conv_chunk_expr(n_chunks: int, doc_id: F.Column | None = None) -> F.Column:
     predicate below MapInPandas, so filtering the output re-extracts
     the whole corpus per chunk)."""
     d = F.col("doc_id") if doc_id is None else doc_id
-    return F.pmod(F.xxhash64(_conv_id_expr(d)), F.lit(n_chunks)).cast("int")
+    return F.pmod(F.xxhash64(conv_id_expr(d)), F.lit(n_chunks)).cast("int")
 
 
 def extract_corpus(
@@ -341,14 +330,8 @@ def extract_corpus(
     salt_buckets: int = SALT_BUCKETS,
     num_partitions: int | None = None,
     doc_predicate: F.Column | None = None,
-    max_chars: int | None = None,
-    pad_frac: float = 0.0,
 ) -> DataFrame:
     """documents at sf_dir -> extracted rows; the one-exchange fast path.
-
-    ``max_chars``/``pad_frac`` surface the B2 bounded-analysis window
-    and the D6 span-padding flag (kernels/extract.py) at the pipeline
-    API; defaults preserve golden-exact output.
 
     Physical plan: scan -> ONE salted exchange of (doc_id, text) rows
     (the partitioning keys are computed expressions — no metadata
@@ -367,20 +350,13 @@ def extract_corpus(
     docs = _read_docs(spark, sf_dir, repeat)
     if doc_predicate is not None:
         docs = docs.where(doc_predicate)
-    if salt_buckets <= 0:
-        # no exchange: trust the source partitioning (an Iceberg table
-        # bucketed on conv_id arrives pre-spread, skew pre-defused)
-        salted = docs
+    d = F.col("doc_id")
+    salt = F.pmod(F.xxhash64(turn_idx_expr(d)), F.lit(salt_buckets))
+    if num_partitions:
+        salted = docs.repartition(num_partitions, conv_id_expr(d), salt)
     else:
-        d = F.col("doc_id")
-        salt = F.pmod(F.xxhash64(_turn_idx_expr(d)), F.lit(salt_buckets))
-        if num_partitions:
-            salted = docs.repartition(num_partitions, _conv_id_expr(d), salt)
-        else:
-            salted = docs.repartition(_conv_id_expr(d), salt)
-    raw = salted.mapInPandas(
-        _gen_extract_batches_fn(max_chars, pad_frac), schema=_FUSED_SCHEMA
-    )
+        salted = docs.repartition(conv_id_expr(d), salt)
+    raw = salted.mapInPandas(_build_extract_batches, schema=_FUSED_SCHEMA)
     return _with_transcript_meta(raw).select(*EXTRACT_SCHEMA_COLS)
 
 
@@ -419,44 +395,13 @@ def transcript_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     turn_rank / prev_role demonstrate the stable-turn-ordering Window the
     north_rule mandates, cross-checkable in DuckDB.
     """
-    from pyspark.sql import Window
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    d = F.col("doc_id")
-    conv_k = F.floor((d - 100) / 8)
-    base = (
-        docs.withColumn(
-            "conv_id",
-            F.when(d < 100, F.lit("conv-skew")).otherwise(
-                F.format_string("conv-%06d", conv_k)
-            ),
-        )
-        .withColumn(
-            "turn_idx", F.when(d < 100, d).otherwise((d - 100) % 8).cast("int")
-        )
-        .withColumn(
-            "role",
-            F.element_at(
-                F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
-                (F.col("turn_idx") % 3) + 1,
-            ),
-        )
-        .withColumn(
-            "ts_epoch",
-            (
-                F.lit(1767225600)
-                + (F.when(d < 100, F.lit(0)).otherwise(conv_k + 1) % 1_000_000)
-                * 3600
-                + F.col("turn_idx")
-            ).cast("long"),
-        )
-    )
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return base.select(
+    return _with_transcript_meta(docs).select(
         "conv_id",
         "turn_idx",
         "role",
-        "ts_epoch",
+        F.unix_seconds("ts").alias("ts_epoch"),
         F.row_number().over(w).cast("long").alias("turn_rank"),
         F.lag("role").over(w).alias("prev_role"),
     )
@@ -488,36 +433,15 @@ def extract_vertical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays byte-identical; the oracle is a committed pure-Python golden
     (scripts/gen_op_golden.py) over the same deterministic payloads.
     """
-    from text_ocr_spark.fixtures import build_vertical
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 3)
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            kinds: list[str] = []
-            texts: list[str] = []
-            spans: list[str] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = build_vertical(int(doc_id), text or "")
-                kind, extracted, sp = extract_payload(payload, None)
-                ids.append(int(doc_id))
-                kinds.append(kind)
-                texts.append(extracted)
-                spans.append(spans_to_json(sp))
-            yield pd.DataFrame(
-                {"doc_id": ids, "kind": kinds, "extracted": texts,
-                 "spans_json": spans}
-            )
-
-    return docs.repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(
-        gen, schema="doc_id long, kind string, extracted string, spans_json string"
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    return (
+        docs.filter(F.col("doc_id") % 10 == 3)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .mapInPandas(
+            partial(_build_extract_batches, builder=_vertical_turn),
+            schema=_FUSED_SCHEMA,
+        )
+        .select("doc_id", "kind", "extracted", "spans_json")
     )
 
 
@@ -574,16 +498,3 @@ def conversation_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         digest, "conv_id string, n_turns long, digest string, sum_chars long"
     )
 
-
-def run_extraction(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    salt_buckets: int = SALT_BUCKETS,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Convenience: documents at sf_dir -> ordered extraction output."""
-    ex = extract_corpus(
-        spark, sf_dir, salt_buckets=salt_buckets, num_partitions=num_partitions
-    )
-    return ordered(ex, num_partitions=num_partitions)
