@@ -183,24 +183,27 @@ def _stream_conv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _resumable_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunked checkpoint-resume surface run end-to-end: commit the
-    first chunks, 'crash', resume, and return the assembled output —
-    which must equal the single-shot golden."""
+    """Chunked checkpoint-resume surface run end-to-end over the
+    transcripts table written from sf_dir: commit the first chunks,
+    'crash', resume, and return the assembled output — which must equal
+    the single-shot golden."""
     import tempfile
 
     from text_ocr_spark.checkpoint import read_extracted, resumable_extract
+    from text_ocr_spark.pipeline import build_transcripts
 
     tmp = tempfile.mkdtemp(prefix="resume_contract_")
-    out = f"{tmp}/run"
+    src, out = f"{tmp}/src", f"{tmp}/run"
+    build_transcripts(spark, sf_dir).write.mode("overwrite").parquet(src)
     try:
         resumable_extract(
-            spark, sf_dir, out, run_id="contract", n_chunks=4,
+            spark, src, out, run_id="contract", n_chunks=4,
             num_partitions=8, fail_after=2,
         )
     except RuntimeError:
         pass  # the injected crash
     resumable_extract(
-        spark, sf_dir, out, run_id="contract-resume", n_chunks=4,
+        spark, src, out, run_id="contract-resume", n_chunks=4,
         num_partitions=8,
     )
     return read_extracted(spark, out).select(*GOLDEN_COLS)

@@ -3,8 +3,12 @@
 Usage (north_rule launch shape, SURVEY.md §3.4):
 
     spark-submit --master local[32] --py-files engine.zip \
-        jobs/extract_job.py --sf-dir /root/testdata/sf0.001 \
+        jobs/extract_job.py --input /tmp/transcripts_sf0.001 \
         --out /tmp/extracted --run-id run1 [--partitions 64]
+
+``--input`` is a parquet transcripts table in the input_hint shape
+(conv_id, turn_idx, role, text, tool, ts). Write one from a documents
+fixture with ``pipeline.build_transcripts(spark, sf_dir).write.parquet(dir)``.
 
 Writes the ordered extraction output as parquet to <out>/extracted and the
 per-partition lineage/metrics rows to <out>/metrics.
@@ -19,20 +23,19 @@ import time
 
 def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--sf-dir", required=True, help="dir with documents.parquet")
+    ap.add_argument("--input", required=True, help="transcripts parquet dir")
     ap.add_argument("--out", required=True, help="output directory")
     ap.add_argument("--run-id", default="adhoc")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--repeat", type=int, default=1, help="corpus replication (bench)")
-    ap.add_argument("--skip-write", action="store_true", help="count only (bench)")
     args = ap.parse_args(argv)
 
     from text_ocr_spark.pipeline import (
-        extract_corpus,
+        extract_transcripts,
         lineage_metrics,
         ordered,
         session_builder,
     )
+    from text_ocr_spark.sources import read_transcripts, write_extracted
 
     spark = session_builder(
         master=None, app="text_ocr_spark.extract"
@@ -62,26 +65,21 @@ def main(argv: list[str]) -> int:
         # overhead; Spark's 200-partition default churns workers at
         # small inputs
         args.partitions = n_cores * 2
-    # one un-replicated pass primes codegen/AQE/scan codepaths so the
-    # timed window reports steady-state throughput (the regime a
-    # 10^12-turn job lives in), not first-query JIT
-    extract_corpus(spark, args.sf_dir, num_partitions=args.partitions).count()
     t0 = time.time()
-    extracted = extract_corpus(
-        spark, args.sf_dir, repeat=args.repeat, num_partitions=args.partitions
+    extracted = extract_transcripts(
+        read_transcripts(spark, args.input), num_partitions=args.partitions
     )
-    if args.skip_write:
-        n = extracted.count()
-    else:
-        # cache so the metrics aggregation doesn't recompute the extraction
-        extracted.persist()
-        out = ordered(extracted, num_partitions=args.partitions)
-        out.write.mode("overwrite").parquet(f"{args.out}/extracted")
-        lineage_metrics(extracted, run_id=args.run_id).write.mode(
-            "overwrite"
-        ).parquet(f"{args.out}/metrics")
-        n = extracted.count()
-        extracted.unpersist()
+    # cache so the metrics aggregation doesn't recompute the extraction
+    extracted.persist()
+    write_extracted(
+        ordered(extracted, num_partitions=args.partitions),
+        f"{args.out}/extracted",
+        mode="overwrite",
+    )
+    lineage = lineage_metrics(extracted, run_id=args.run_id)
+    write_extracted(lineage, f"{args.out}/metrics", mode="overwrite")
+    n = extracted.count()
+    extracted.unpersist()
     dt = time.time() - t0
     print(f'{{"rows": {n}, "secs": {dt:.2f}, "turns_per_sec": {n / dt:.1f}}}')
     spark.stop()

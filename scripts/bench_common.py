@@ -1,8 +1,8 @@
 """Shared spark-submit bench plumbing for the two scaling-evidence
 scripts (bench_scaling.py: local[N] thread ladder; bench_executors.py:
-local-cluster[N,c,m] real executors). One copy of the zip rebuild,
-submit recipe, and JSON-line scrape — the two scripts diverged once
-already (a stale-zip bug fixed twice)."""
+local-cluster[N,c,m] real executors). One copy of the input table
+write, zip rebuild, submit recipe, and JSON-line scrape — the two
+scripts diverged once already (a stale-zip bug fixed twice)."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ZIP_PATH = "/tmp/engine_bench.zip"
+TRANSCRIPTS_PATH = "/tmp/bench_transcripts"
 
 
 def git_rev() -> str:
@@ -41,11 +42,26 @@ def rebuild_zip() -> str:
     return ZIP_PATH
 
 
+def write_transcripts(sf_dir: str, repeat: int) -> str:
+    """Write build_transcripts(sf_dir, repeat) as the parquet table every
+    submitted job reads. Runs once per bench invocation, outside any
+    timed window; rewritten each time so it never lags the code."""
+    from text_ocr_spark.pipeline import build_transcripts, session_builder
+
+    spark = session_builder(app="bench_transcripts").getOrCreate()
+    try:
+        build_transcripts(spark, sf_dir, repeat=repeat).write.mode(
+            "overwrite"
+        ).parquet(TRANSCRIPTS_PATH)
+    finally:
+        spark.stop()
+    return TRANSCRIPTS_PATH
+
+
 def submit_extract_job(
     master: str,
     partitions: int,
-    sf_dir: str,
-    repeat: int,
+    input_path: str,
     out: str,
     run_id: str,
     driver_memory: str = "8g",
@@ -61,12 +77,10 @@ def submit_extract_job(
         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=8192",
         "--py-files", zip_path,
         os.path.join(REPO, "jobs/extract_job.py"),
-        "--sf-dir", sf_dir,
+        "--input", input_path,
         "--out", out,
         "--run-id", run_id,
-        "--repeat", str(repeat),
         "--partitions", str(partitions),
-        "--skip-write",
     ]
     t0 = time.time()
     proc = subprocess.run(cmd, capture_output=True, text=True, check=True)

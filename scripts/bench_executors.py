@@ -13,7 +13,8 @@ can exist here, and strictly stronger evidence than `local[N]` threads.
         [--sf-dir /root/testdata/sf0.1] [--repeat 64] \
         [--n 2] [--cores 2] [--mem 4096]
 
-Runs the IDENTICAL spark-submit job + input at N and 4N executors
+Runs the IDENTICAL spark-submit job + input (a transcripts table written
+once from --sf-dir x --repeat, untimed) at N and 4N executors
 (cores/mem per executor fixed, the scale-out shape), best of TRIALS
 runs per level (~20% hypervisor noise on this guest), and reports
 
@@ -36,9 +37,7 @@ sys.path.insert(0, os.path.join(REPO, "scripts"))
 TRIALS = 3
 
 
-def run_once(
-    n_exec: int, cores: int, mem_mb: int, sf_dir: str, repeat: int
-) -> dict:
+def run_once(n_exec: int, cores: int, mem_mb: int, input_path: str) -> dict:
     from bench_common import submit_extract_job
 
     total_cores = n_exec * cores
@@ -46,8 +45,7 @@ def run_once(
     rec = submit_extract_job(
         master=f"local-cluster[{n_exec},{cores},{mem_mb}]",
         partitions=partitions,
-        sf_dir=sf_dir,
-        repeat=repeat,
+        input_path=input_path,
         out=f"/tmp/bench_exec_{n_exec}",
         run_id=f"exec-{n_exec}",
         driver_memory="8g",
@@ -59,10 +57,10 @@ def run_once(
     return rec
 
 
-def run_level(n_exec: int, cores: int, mem_mb: int, sf_dir: str, repeat: int) -> dict:
+def run_level(n_exec: int, cores: int, mem_mb: int, input_path: str) -> dict:
     best: dict | None = None
     for _ in range(TRIALS):
-        rec = run_once(n_exec, cores, mem_mb, sf_dir, repeat)
+        rec = run_once(n_exec, cores, mem_mb, input_path)
         if best is None or rec["turns_per_sec"] > best["turns_per_sec"]:
             best = rec
     assert best is not None
@@ -79,7 +77,7 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--cache", default="/tmp/bench_exec_cache.json")
     args = ap.parse_args(argv)
 
-    from bench_common import git_rev
+    from bench_common import git_rev, write_transcripts
 
     rev = git_rev()
     cache: dict[str, dict] = {}
@@ -95,8 +93,9 @@ def main(argv: list[str]) -> int:
             f":r{args.repeat}:{args.sf_dir}:{rev}"
         )
 
+    input_path = write_transcripts(args.sf_dir, args.repeat)
     for n_exec in (args.n, 4 * args.n):
-        rec = run_level(n_exec, args.cores, args.mem, args.sf_dir, args.repeat)
+        rec = run_level(n_exec, args.cores, args.mem, input_path)
         old = cache.get(key(n_exec))
         if old is not None and old["turns_per_sec"] > rec["turns_per_sec"]:
             rec = old

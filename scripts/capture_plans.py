@@ -180,6 +180,8 @@ def _langid_classify_df(spark, docs):
 
 
 def main() -> int:
+    import tempfile
+
     from text_ocr_spark.ops.dedup import embed_pairs, minhash_dedup
     from text_ocr_spark.ops.text_stats import frequent_ngrams
     from text_ocr_spark.ops.joins import purchase_error_window, purchases_asof_view
@@ -189,12 +191,15 @@ def main() -> int:
         top_revenue_customers,
     )
     from text_ocr_spark.ops.similarity import brute_topk
+    from text_ocr_spark.checkpoint import chunk_col
     from text_ocr_spark.pipeline import (
-        conv_chunk_expr,
+        build_transcripts,
         extract_corpus,
+        extract_transcripts,
         ordered,
         session_builder,
     )
+    from text_ocr_spark.sources import read_transcripts
 
     spark = session_builder(master="local[4]", app="plans").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -205,6 +210,8 @@ def main() -> int:
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    transcripts_dir = tempfile.mkdtemp(prefix="plans_transcripts_")
+    build_transcripts(spark, SF).write.mode("overwrite").parquet(transcripts_dir)
 
     sections = [
         (
@@ -274,15 +281,19 @@ def main() -> int:
         ),
         (
             "resumable chunk extraction (scan-side chunk predicate)",
-            "The chunk filter (pmod(xxhash64(conv_id-expr(doc_id)), n) = "
-            "cid) sits BELOW the Arrow stage, directly on the scan output "
-            "— each chunk reads, exchanges, and extracts only its own "
-            "conversations. Round 1 filtered the extraction OUTPUT, which "
-            "Catalyst cannot push below MapInPandas, so every chunk "
-            "re-extracted the whole corpus. On an Iceberg table bucketed "
-            "by conv_id the same predicate prunes data files.",
-            extract_corpus(
-                spark, SF, num_partitions=8, doc_predicate=conv_chunk_expr(8) == 3
+            "checkpoint.resumable_extract's chunk job over the transcripts "
+            "table: the chunk filter chunk_col(n) = cid, i.e. "
+            "pmod(xxhash64(conv_id), n) = cid, on the table's real "
+            "conv_id column sits BELOW the Arrow stage, directly on the "
+            "scan output — each chunk reads, exchanges, and extracts only "
+            "its own conversations. Round 1 filtered the extraction "
+            "OUTPUT, which Catalyst cannot push below MapInPandas, so "
+            "every chunk re-extracted the whole corpus. On an Iceberg "
+            "table bucketed by conv_id the same predicate prunes data "
+            "files.",
+            extract_transcripts(
+                read_transcripts(spark, transcripts_dir).where(chunk_col(8) == 3),
+                num_partitions=8,
             ),
         ),
         (

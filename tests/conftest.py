@@ -23,6 +23,17 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def transcripts_dir_tiny(spark, tmp_path_factory) -> str:
+    """build_transcripts(SF_TINY) written once as a parquet transcripts
+    table (the input_hint shape the job and the resume path read)."""
+    from text_ocr_spark.pipeline import build_transcripts
+
+    path = str(tmp_path_factory.mktemp("transcripts") / "sf0.001")
+    build_transcripts(spark, SF_TINY).write.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="session")
 def docs_tiny() -> pd.DataFrame:
     return duckdb.sql(
         f"SELECT doc_id, text FROM read_parquet('{SF_TINY}/documents.parquet')"

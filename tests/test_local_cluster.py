@@ -19,12 +19,11 @@ import duckdb
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF = "/root/testdata/sf0.001"
 GOLDEN = os.path.join(REPO, "fixturedata", "golden_sf0.001.parquet")
 
 
 @pytest.mark.slow
-def test_local_cluster_job_matches_golden():
+def test_local_cluster_job_matches_golden(transcripts_dir_tiny):
     tmp = tempfile.mkdtemp(prefix="lc_test_")
     zip_path = os.path.join(tmp, "engine.zip")
     subprocess.run(["zip", "-qr", zip_path, "text_ocr_spark"], cwd=REPO, check=True)
@@ -35,7 +34,7 @@ def test_local_cluster_job_matches_golden():
             "--master", "local-cluster[2,1,1536]",
             "--py-files", zip_path,
             os.path.join(REPO, "jobs/extract_job.py"),
-            "--sf-dir", SF,
+            "--input", transcripts_dir_tiny,
             "--out", out,
             "--run-id", "lc-test",
         ],

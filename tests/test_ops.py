@@ -1043,67 +1043,3 @@ def test_ivf_trained_recall_on_clustered_corpus(spark):
     r_t = recall(trained)
     assert r_t >= 0.9, (r_p, r_t)
     assert r_t > r_p + 0.2, (r_p, r_t)
-
-
-def test_corpus_stats_carrier_one_probe_per_dag(spark, docs, monkeypatch):
-    """VERDICT r4 item 8: a DAG that runs minhash_dedup +
-    neardup_resolve + simhash_pairs over the same corpus pays the
-    probe ONCE via the CorpusStats carrier — zero further auxiliary
-    driver actions — with outputs identical to the self-probed ops;
-    stats from a different frame or tokenizer are refused."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from text_ocr_spark.ops.dedup import (
-        corpus_stats,
-        minhash_dedup,
-        neardup_resolve,
-        simhash_pairs,
-    )
-
-    want_pairs = sorted(map(tuple, minhash_dedup(docs, 0.95).collect()))
-    want_res = sorted(map(tuple, neardup_resolve(docs, 0.95).collect()))
-    want_sim = sorted(map(tuple, simhash_pairs(docs).collect()))
-
-    stats = corpus_stats(docs)  # the DAG's one probe
-
-    cls = type(docs)
-    calls: list[str] = []
-    depth = {"d": 0}
-    for name in ("first", "head", "take", "collect", "count", "toPandas"):
-        orig = getattr(cls, name)
-
-        def wrap(self, *a, _orig=orig, _name=name, **kw):
-            top = depth["d"] == 0
-            depth["d"] += 1
-            try:
-                return _orig(self, *a, **kw)
-            finally:
-                depth["d"] -= 1
-                if top:
-                    calls.append(_name)
-
-        monkeypatch.setattr(cls, name, wrap)
-
-    got_pairs = minhash_dedup(docs, 0.95, stats=stats)
-    got_sim = simhash_pairs(docs, stats=stats)
-    # plan construction ran zero auxiliary actions (neardup_resolve is
-    # checked for values only below — its star-contraction fixed-point
-    # counters are inherent bounded actions, not probes)
-    assert calls == []
-    monkeypatch.undo()
-
-    got_res = neardup_resolve(docs, 0.95, stats=stats)
-    assert sorted(map(tuple, got_pairs.collect())) == want_pairs
-    assert sorted(map(tuple, got_res.collect())) == want_res
-    assert sorted(map(tuple, got_sim.collect())) == want_sim
-
-    # guard rails: wrong frame, wrong ngram, wrong dense limit
-    other = docs.where(F.col("doc_id") % 2 == 0)
-    with _pytest.raises(ValueError, match="fingerprint"):
-        minhash_dedup(other, 0.95, stats=stats)
-    with _pytest.raises(ValueError, match="ngram"):
-        minhash_dedup(docs, 0.95, ngram=3, stats=stats)
-    with _pytest.raises(ValueError, match="dense_vocab_limit"):
-        minhash_dedup(docs, 0.95, dense_vocab_limit=7, stats=stats)

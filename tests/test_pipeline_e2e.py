@@ -44,7 +44,7 @@ def test_count_conservation(extracted_spark, transcripts_tiny):
 
 
 def test_order_invariance_under_salting(spark, golden_tiny):
-    """Shuffled input + different salt bucket count -> identical output."""
+    """Shuffled input + a different partition count -> identical output."""
     from pyspark.sql import functions as F
 
     from text_ocr_spark.pipeline import (
@@ -55,7 +55,7 @@ def test_order_invariance_under_salting(spark, golden_tiny):
 
     t = build_transcripts(spark, SF_TINY)
     shuffled = t.orderBy(F.xxhash64("conv_id", "turn_idx"))  # scramble order
-    out = ordered(extract_transcripts(shuffled, salt_buckets=5, num_partitions=7))
+    out = ordered(extract_transcripts(shuffled, num_partitions=7))
     got = _canon(out.select(*GOLDEN_COLS).toPandas())
     assert_frame_equal(got, _canon(golden_tiny), check_dtype=False)
 
@@ -78,9 +78,34 @@ def test_lineage_metrics(spark):
     m = lineage_metrics(ex, run_id="test-run").toPandas()
     assert m.rows_out.sum() == t.count()
     assert (m.run_id == "test-run").all()
-    for k in ("n_html", "n_pdf", "n_ocr", "n_plain", "n_empty"):
+    for k in ("n_html", "n_pdf", "n_ocr", "n_plain", "n_vertical", "n_empty"):
         assert k in m.columns
     assert m.bytes_in.sum() > 0 and m.bytes_out.sum() > 0
+
+
+def test_lineage_counts_every_kind(spark):
+    """Every turn lands in exactly one n_<kind> column, vertical turns
+    included: sum(n_*) == rows_out."""
+    import datetime
+
+    from text_ocr_spark.fixtures import build_payload, build_vertical
+    from text_ocr_spark.pipeline import extract_transcripts, lineage_metrics
+    from text_ocr_spark.sources import TRANSCRIPT_STRUCT
+
+    text = (
+        "the quick brown fox jumps over the lazy dog and keeps running "
+        "through the quiet green field until night falls"
+    )
+    ts = datetime.datetime(2026, 1, 1)
+    rows = [("conv-v", 0, "tool", build_vertical(3, text), "pdf_read", ts)]
+    rows += [
+        ("conv-v", d, "user", *build_payload(d, text), ts) for d in range(1, 10)
+    ]
+    ex = extract_transcripts(spark.createDataFrame(rows, TRANSCRIPT_STRUCT))
+    m = lineage_metrics(ex, run_id="kinds").toPandas()
+    n_cols = [c for c in m.columns if c.startswith("n_")]
+    assert sum(m[c].sum() for c in n_cols) == m.rows_out.sum() == len(rows)
+    assert m.n_vertical.sum() == 1
 
 
 def test_transcript_shape(spark):

@@ -84,15 +84,16 @@ def test_jvm_only_ops_have_no_python_stage(spark):
     assert re.search(r"^\s*\S*\s*\* \w", plan_str(spark, token_stats(docs)), re.M)
 
 
-def test_resume_chunk_filter_sits_below_the_arrow_stage(spark):
+def test_resume_chunk_filter_sits_below_the_arrow_stage(spark, transcripts_dir_tiny):
     """The chunked-resume predicate must filter the SCAN side, not the
     extraction output: a Filter above MapInPandas re-extracts the whole
     corpus once per chunk (round-1 defect, VERDICT r1 item 1)."""
-    from text_ocr_spark.pipeline import conv_chunk_expr, extract_corpus
+    from text_ocr_spark.checkpoint import chunk_col
+    from text_ocr_spark.pipeline import extract_transcripts
+    from text_ocr_spark.sources import read_transcripts
 
-    df = extract_corpus(
-        spark, SF_TINY, num_partitions=8, doc_predicate=conv_chunk_expr(4) == 1
-    )
+    chunk = read_transcripts(spark, transcripts_dir_tiny).where(chunk_col(4) == 1)
+    df = extract_transcripts(chunk, num_partitions=8)
     p = plan_str(spark, df, mode="simple")
     # simple mode prints root-first: the Filter below the Arrow stage
     # appears AFTER MapInPandas and holds the chunk hash expression

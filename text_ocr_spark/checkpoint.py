@@ -28,6 +28,7 @@ tested path and the Iceberg calls are gated (sources.py, STATUS.md
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -36,12 +37,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from text_ocr_spark.pipeline import (
-    SALT_BUCKETS,
-    conv_chunk_expr,
-    extract_corpus,
-    lineage_metrics,
-)
+from text_ocr_spark.kernels.constants import KINDS
+from text_ocr_spark.pipeline import extract_transcripts, lineage_metrics
+from text_ocr_spark.sources import read_transcripts, write_extracted
 
 MANIFEST_DIR = "manifest"
 CHUNK_DIR = "extracted"
@@ -84,17 +82,17 @@ def chunk_col(n_chunks: int) -> F.Column:
 
 def resumable_extract(
     spark: SparkSession,
-    sf_dir: str,
+    input_path: str,
     out_dir: str,
     *,
     run_id: str,
     n_chunks: int = 8,
-    salt_buckets: int = SALT_BUCKETS,
     num_partitions: int | None = None,
     fail_after: int | None = None,
     snapshot_id: str | None = None,
 ) -> dict:
-    """Run (or resume) the extraction, committing chunk by chunk.
+    """Run (or resume) the extraction of the transcripts table at
+    ``input_path``, committing chunk by chunk.
 
     Identical final output to a single-shot run — pytest kills a run
     mid-way (``fail_after``) and asserts the resumed result matches.
@@ -105,7 +103,7 @@ def resumable_extract(
     so a restart loses at most one chunk of work, and the manifest is
     the per-partition lineage table the north_rule asks for.
     """
-    snapshot_id = snapshot_id or _snapshot_fingerprint(sf_dir)
+    snapshot_id = snapshot_id or _snapshot_fingerprint(input_path)
     done = committed_chunks(out_dir)
     stale = [cid for cid, rec in done.items() if rec["snapshot_id"] != snapshot_id]
     if stale:
@@ -113,6 +111,7 @@ def resumable_extract(
             f"manifest was committed against another input snapshot: {stale}"
         )
 
+    transcripts = read_transcripts(spark, input_path)
     ran = 0
     skipped = 0
     rows_out = 0
@@ -124,29 +123,23 @@ def resumable_extract(
         if fail_after is not None and ran >= fail_after:
             raise RuntimeError(f"injected failure after {ran} chunks")
         t0 = time.time()
-        # chunk predicate computed from doc_id on the SCAN side: each
-        # chunk's job reads, exchanges, and extracts only its own
-        # conversations. Filtering the extraction OUTPUT instead (the
-        # equivalent chunk_col(n)==cid on conv_id) would sit above the
-        # MapInPandas node, which Catalyst cannot push a predicate
-        # below — re-running the full Python extraction once per chunk.
-        ex = extract_corpus(
-            spark,
-            sf_dir,
-            salt_buckets=salt_buckets,
+        # the chunk predicate is on the INPUT's conv_id column, so it sits
+        # on the scan side, below the salted exchange and the Arrow stage:
+        # each chunk reads, exchanges and extracts only its own
+        # conversations. Filtering the extraction OUTPUT instead would sit
+        # above MapInPandas, which Catalyst pushes no predicate below, and
+        # re-extract the whole corpus once per chunk.
+        ex = extract_transcripts(
+            transcripts.where(chunk_col(n_chunks) == cid),
             num_partitions=num_partitions,
-            doc_predicate=conv_chunk_expr(n_chunks) == cid,
         )
         chunk_path = os.path.join(out_dir, CHUNK_DIR, f"chunk={cid}")
-        ex.write.mode("overwrite").parquet(chunk_path)
+        write_extracted(ex, chunk_path, mode="overwrite")
         metrics = (
             lineage_metrics(spark.read.parquet(chunk_path), run_id=run_id)
             .agg(
                 F.sum("rows_out").alias("rows_out"),
-                *[
-                    F.sum(f"n_{k}").alias(f"n_{k}")
-                    for k in ("html", "pdf", "ocr", "plain", "empty")
-                ],
+                *[F.sum(f"n_{k}").alias(f"n_{k}") for k in KINDS],
                 F.sum("bytes_in").alias("bytes_in"),
                 F.sum("bytes_out").alias("bytes_out"),
             )
@@ -160,10 +153,7 @@ def resumable_extract(
             "bytes_in": int(metrics["bytes_in"] or 0),
             "bytes_out": int(metrics["bytes_out"] or 0),
             "wall_ms": int(1000 * (time.time() - t0)),
-            **{
-                f"n_{k}": int(metrics[f"n_{k}"] or 0)
-                for k in ("html", "pdf", "ocr", "plain", "empty")
-            },
+            **{f"n_{k}": int(metrics[f"n_{k}"] or 0) for k in KINDS},
         }
         _commit_chunk(out_dir, rec)
         ran += 1
@@ -176,9 +166,22 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, CHUNK_DIR))
 
 
-def _snapshot_fingerprint(sf_dir: str) -> str:
-    """Stand-in for the Iceberg snapshot id: input file names + mtimes +
-    sizes. Good enough to refuse resuming over changed input."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(path)
-    return f"{os.path.basename(path)}:{st.st_size}:{int(st.st_mtime)}"
+def _snapshot_fingerprint(input_path: str) -> str:
+    """Stand-in for the Iceberg snapshot id: a digest of the input's data
+    files (sorted relative name, size, mtime), skipping the ``_``/``.``
+    files Spark itself ignores. Good enough to refuse resuming over
+    changed input."""
+    if os.path.isfile(input_path):
+        root, files = os.path.dirname(input_path), [input_path]
+    else:
+        root, files = input_path, []
+        for d, dirs, names in os.walk(input_path):
+            dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+            files += [
+                os.path.join(d, n) for n in names if not n.startswith(("_", "."))
+            ]
+    h = hashlib.sha1()
+    for f in sorted(files):
+        st = os.stat(f)
+        h.update(f"{os.path.relpath(f, root)}:{st.st_size}:{int(st.st_mtime)}\n".encode())
+    return h.hexdigest()

@@ -40,8 +40,9 @@ LEVEL_C: tuple[float, ...] = tuple(
 )
 
 #: payload kinds emitted by the classifier (angle-class analog:
-#: {0:hengdao,1:hengzhen,2:shudao,3:shuzhen} -> {html,pdf,ocr,plain}+empty)
-KINDS: tuple[str, ...] = ("html", "pdf", "ocr", "plain", "empty")
+#: {0:hengdao,1:hengzhen,2:shudao,3:shuzhen} -> {html,pdf,ocr,plain},
+#: plus the transposed-glyph ``vertical`` route and ``empty``)
+KINDS: tuple[str, ...] = ("html", "pdf", "ocr", "plain", "vertical", "empty")
 
 # --- B2 analog: bounded analysis size -------------------------------------
 #: The reference bounds EVERY input before analysis (resize_img long-side

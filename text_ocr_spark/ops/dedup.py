@@ -54,7 +54,6 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -79,22 +78,6 @@ DENSE_BLOCK = 2048
 #: quadratic — no strategy fixes that; resolve_pairs' cluster output is
 #: the scalable product there.
 DENSE_MAX_DOCS = 8 * DENSE_BLOCK
-
-
-@dataclass(frozen=True)
-class CorpusStats:
-    """One probe's worth of strategy statistics, reusable across the
-    dedup family within a DAG (VERDICT r4 item 8 — see
-    ``corpus_stats``). All counts are exact; ``vocab`` is the sorted
-    exact vocabulary when the dense kernel applies, else None."""
-
-    n_reps: int
-    n_docs: int
-    f2_excess: int
-    vocab: tuple[str, ...] | None
-    ngram: int
-    dense_vocab_limit: int
-    fingerprint: str
 
 
 def _tile_partitions(n_blocks: int, df: DataFrame) -> int:
@@ -377,7 +360,6 @@ def jaccard_pairs(
     threshold: float = 0.95,
     dense_vocab_limit: int = DENSE_VOCAB_LIMIT,
     ngram: int = 1,
-    stats: "CorpusStats | None" = None,
 ) -> DataFrame:
     """Exact token-set jaccard pairs (doc_a < doc_b, jaccard >= threshold).
 
@@ -390,18 +372,7 @@ def jaccard_pairs(
     collapse here), so the probe key is doc_id itself.
     """
     toks_df = _toks_of(docs, ngram)
-    if stats is not None:
-        # canonical (text-hash-keyed) stats: the dense cap here keys on
-        # the FULL doc count (no collapse in this op), which the
-        # carrier holds exactly
-        vocab, _, n_docs, _f2 = _use_stats(
-            stats, docs, ngram, dense_vocab_limit, "jaccard_pairs"
-        )
-        if vocab is not None and n_docs <= DENSE_MAX_DOCS:
-            return _dense_jaccard_pairs(
-                docs, threshold, vocab, n_docs, toks=toks_df
-            )
-    elif dense_vocab_limit > 0:  # no dup gate — skip the probe when forced
+    if dense_vocab_limit > 0:  # no dup gate — skip the probe when forced
         vocab, _, n_docs, _f2 = _probe_corpus(
             _probe_frame(docs, ngram, key_col=F.col("doc_id")),
             dense_vocab_limit,
@@ -768,77 +739,6 @@ def _rep_neardup_pairs(
     )
 
 
-def corpus_stats(
-    docs: DataFrame,
-    ngram: int = 1,
-    dense_vocab_limit: int = DENSE_VOCAB_LIMIT,
-) -> "CorpusStats":
-    """Run the strategy probe ONCE and return a reusable carrier
-    (VERDICT r4 item 8): a curation DAG that calls several dedup-family
-    ops on the same corpus (``minhash_dedup`` + ``neardup_resolve`` +
-    ``simhash_pairs``...) passes the result as ``stats=`` so the probe
-    executes once per DAG instead of once per op. The carrier records
-    an expression-id-normalized digest of the input's analyzed plan;
-    every consumer validates it (plus the tokenizer ngram) and raises
-    on mismatch rather than silently using stats from a different
-    corpus."""
-    vocab, n_reps, n_docs, f2x = _probe_corpus(
-        _probe_frame(docs, ngram), dense_vocab_limit
-    )
-    return CorpusStats(
-        n_reps=n_reps,
-        n_docs=n_docs,
-        f2_excess=f2x,
-        vocab=tuple(vocab) if vocab is not None else None,
-        ngram=ngram,
-        dense_vocab_limit=dense_vocab_limit,
-        fingerprint=_plan_fingerprint(docs),
-    )
-
-
-def _plan_fingerprint(df: DataFrame) -> str:
-    """Input-identity digest for CorpusStats validation: md5 of the
-    analyzed logical plan with expression ids (#123 — fresh per
-    invocation) normalized away. No data is scanned; two frames with
-    the same lineage shape agree, a different source/filter/projection
-    disagrees. Conservative by construction: a false mismatch costs
-    one re-probe, a false match cannot occur for frames that read
-    different inputs."""
-    import re
-
-    s = df._jdf.queryExecution().analyzed().toString()
-    return hashlib.md5(re.sub(r"#\d+", "#", s).encode()).hexdigest()
-
-
-def _use_stats(
-    stats: "CorpusStats", docs: DataFrame, ngram: int, dense_vocab_limit: int, op: str
-) -> tuple[list[str] | None, int, int, int]:
-    """Validate a caller-supplied CorpusStats against this op's input
-    and parameters, and unpack it in _probe_corpus return shape."""
-    if stats.ngram != ngram:
-        raise ValueError(
-            f"{op}: CorpusStats was probed with ngram={stats.ngram}, "
-            f"but this call tokenizes with ngram={ngram}"
-        )
-    if stats.dense_vocab_limit != dense_vocab_limit:
-        raise ValueError(
-            f"{op}: CorpusStats was probed with dense_vocab_limit="
-            f"{stats.dense_vocab_limit}, but this call uses "
-            f"{dense_vocab_limit} — re-probe with corpus_stats(docs, "
-            f"ngram, {dense_vocab_limit})"
-        )
-    fp = _plan_fingerprint(docs)
-    if stats.fingerprint != fp:
-        raise ValueError(
-            f"{op}: CorpusStats fingerprint does not match this input "
-            "frame — the stats were probed on a different corpus (or a "
-            "differently-shaped plan over it); re-run corpus_stats on "
-            "THIS frame"
-        )
-    vocab = list(stats.vocab) if stats.vocab is not None else None
-    return vocab, stats.n_reps, stats.n_docs, stats.f2_excess
-
-
 def _gated_neardup_pairs(
     docs: DataFrame,
     threshold: float,
@@ -846,18 +746,13 @@ def _gated_neardup_pairs(
     ngram: int,
     collapse: bool | None,
     op: str,
-    stats: "CorpusStats | None" = None,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
     """Shared minhash_dedup / neardup_resolve core: one probe pass feeds
     BOTH the dup-rate collapse gate and the dense-vs-LSH strategy pick,
     then the verified pairs run over reps (collapse engaged) or the raw
     corpus (skipped). -> (pairs, reps, members); members is None iff the
     collapse was skipped (pairs are then already doc-level)."""
-    if stats is not None:
-        vocab, n_reps, n_docs, f2_excess = _use_stats(
-            stats, docs, ngram, dense_vocab_limit, op
-        )
-    elif collapse is not None and dense_vocab_limit <= 0:
+    if collapse is not None and dense_vocab_limit <= 0:
         # both decisions forced: no auxiliary action at all
         vocab, n_reps, n_docs, f2_excess = None, 0, 0, 0
     else:
@@ -886,7 +781,6 @@ def minhash_dedup(
     dense_vocab_limit: int = DENSE_VOCAB_LIMIT,
     ngram: int = 1,
     collapse: bool | None = None,
-    stats: CorpusStats | None = None,
 ) -> DataFrame:
     """Near-dup pairs at jaccard >= threshold — representative-collapse
     first (when the dup-rate probe says the corpus has exact dups worth
@@ -897,11 +791,9 @@ def minhash_dedup(
     duplication term lives only in the final membership join, never in
     a band bucket). ``ngram > 1`` dedups on w-shingles instead of token
     sets (order-sensitive, the production near-dup unit). Equals
-    jaccard_pairs on any corpus (pytest-asserted). ``stats`` (from
-    ``corpus_stats`` on the same frame) skips the probe entirely."""
+    jaccard_pairs on any corpus (pytest-asserted)."""
     pairs, _reps, members = _gated_neardup_pairs(
-        docs, threshold, dense_vocab_limit, ngram, collapse, "minhash_dedup",
-        stats=stats,
+        docs, threshold, dense_vocab_limit, ngram, collapse, "minhash_dedup"
     )
     if members is None:
         return pairs
@@ -1015,7 +907,6 @@ def neardup_resolve(
     dense_vocab_limit: int = DENSE_VOCAB_LIMIT,
     ngram: int = 1,
     collapse: bool | None = None,
-    stats: CorpusStats | None = None,
 ) -> DataFrame:
     """Verified rep pairs -> connected components -> keep/drop per doc.
 
@@ -1030,8 +921,7 @@ def neardup_resolve(
     member join degenerates to identity there, so it is elided).
     """
     pairs, reps, members = _gated_neardup_pairs(
-        docs, threshold, dense_vocab_limit, ngram, collapse,
-        "neardup_resolve", stats=stats,
+        docs, threshold, dense_vocab_limit, ngram, collapse, "neardup_resolve"
     )
     if members is None:
         return resolve_pairs(
@@ -1397,7 +1287,6 @@ def simhash_pairs(
     docs: DataFrame,
     radius: int = 3,
     collapse: bool | None = None,
-    stats: CorpusStats | None = None,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash_a, simhash_b) <= radius.
 
@@ -1408,23 +1297,9 @@ def simhash_pairs(
     contributes ONE row per band, never an O(k^2) hot bucket. The same
     dup-rate gate as minhash_dedup skips the collapse on low-dup
     corpora (its probe is the exact group-stats pass — no tokenization;
-    simhash has no dense route to pick). A caller-supplied ``stats``
-    skips the probe; only its counts are used, so any unigram-probed
-    CorpusStats of this frame works regardless of its vocab fields."""
+    simhash has no dense route to pick)."""
     if collapse is None:
-        if stats is not None:
-            if stats.fingerprint != _plan_fingerprint(docs):
-                raise ValueError(
-                    "simhash_pairs: CorpusStats fingerprint does not "
-                    "match this input frame — re-run corpus_stats"
-                )
-            n_reps, n_docs, f2_excess = (
-                stats.n_reps, stats.n_docs, stats.f2_excess,
-            )
-        else:
-            _, n_reps, n_docs, f2_excess = _probe_corpus(
-                _probe_frame(docs), 0
-            )
+        _, n_reps, n_docs, f2_excess = _probe_corpus(_probe_frame(docs), 0)
         collapse = _gate_collapse(n_reps, n_docs, f2_excess, "simhash_pairs")
     if not collapse:
         return _simhash_rep_pairs(docs, radius)

@@ -36,13 +36,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from text_ocr_spark.fixtures import build_payload, build_vertical
+from text_ocr_spark.kernels.constants import KINDS
 from text_ocr_spark.kernels.extract import extract_payload
 from text_ocr_spark.oracle import spans_to_json
+from text_ocr_spark.sources import TRANSCRIPT_STRUCT
 
-#: default number of salt buckets for the hot-conversation shuffle
+#: salt buckets of the hot-conversation shuffle
 SALT_BUCKETS = 16
-
-TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 EXTRACT_SCHEMA = (
     "conv_id string, turn_idx int, role string, tool string, ts timestamp, "
@@ -124,7 +124,7 @@ def build_transcripts(
     payloads = docs.mapInPandas(
         _gen_payloads, schema="doc_id long, text string, tool string"
     )
-    return _with_transcript_meta(payloads).select(*TRANSCRIPT_COLS)
+    return _with_transcript_meta(payloads).select(*TRANSCRIPT_STRUCT.fieldNames())
 
 
 def _read_docs(spark: SparkSession, sf_dir: str, repeat: int) -> DataFrame:
@@ -261,10 +261,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def extract_transcripts(
-    df: DataFrame,
-    *,
-    salt_buckets: int = SALT_BUCKETS,
-    num_partitions: int | None = None,
+    df: DataFrame, *, num_partitions: int | None = None
 ) -> DataFrame:
     """transcripts -> extracted rows (one per turn, always).
 
@@ -273,7 +270,7 @@ def extract_transcripts(
     the Window/sort that restores ordering runs on unsalted keys afterwards.
     """
     narrow = df.select("conv_id", "turn_idx", "role", "tool", "ts", "text")
-    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(SALT_BUCKETS))
     if num_partitions:
         salted = narrow.repartition(num_partitions, F.col("conv_id"), salt)
     else:
@@ -310,26 +307,12 @@ _FUSED_SCHEMA = (
 )
 
 
-def conv_chunk_expr(n_chunks: int, doc_id: F.Column | None = None) -> F.Column:
-    """Deterministic conversation chunk id computed FROM doc_id — the
-    scan-side twin of checkpoint.chunk_col. Because conv_id is a pure
-    expression of doc_id, ``pmod(xxhash64(conv_id_expr(doc_id)), n)``
-    equals ``pmod(xxhash64(conv_id), n)`` on the extracted output, but
-    this form filters BEFORE the Arrow stage (Catalyst cannot push a
-    predicate below MapInPandas, so filtering the output re-extracts
-    the whole corpus per chunk)."""
-    d = F.col("doc_id") if doc_id is None else doc_id
-    return F.pmod(F.xxhash64(conv_id_expr(d)), F.lit(n_chunks)).cast("int")
-
-
 def extract_corpus(
     spark: SparkSession,
     sf_dir: str,
     *,
     repeat: int = 1,
-    salt_buckets: int = SALT_BUCKETS,
     num_partitions: int | None = None,
-    doc_predicate: F.Column | None = None,
 ) -> DataFrame:
     """documents at sf_dir -> extracted rows; the one-exchange fast path.
 
@@ -340,18 +323,10 @@ def extract_corpus(
     Identical output to build_transcripts |> extract_transcripts
     (pytest-pinned), with half the exchanges and a minimal Arrow
     boundary: 2 columns in, none passing through.
-
-    ``doc_predicate`` (a Column over ``doc_id``/``text``) filters the
-    scan side BEFORE the exchange and Arrow stage — the hook the
-    chunked resume path uses so each chunk extracts only its own
-    conversations (on an Iceberg table bucketed by conv_id the same
-    predicate prunes data files instead of merely rows).
     """
     docs = _read_docs(spark, sf_dir, repeat)
-    if doc_predicate is not None:
-        docs = docs.where(doc_predicate)
     d = F.col("doc_id")
-    salt = F.pmod(F.xxhash64(turn_idx_expr(d)), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(turn_idx_expr(d)), F.lit(SALT_BUCKETS))
     if num_partitions:
         salted = docs.repartition(num_partitions, conv_id_expr(d), salt)
     else:
@@ -376,7 +351,7 @@ def lineage_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     output — no second pass over the input."""
     kind_count = [
         F.sum((F.col("kind") == k).cast("long")).alias(f"n_{k}")
-        for k in ("html", "pdf", "ocr", "plain", "empty")
+        for k in KINDS
     ]
     return extracted.groupBy("part_id").agg(
         F.count("*").alias("rows_out"),

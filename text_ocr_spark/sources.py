@@ -41,8 +41,6 @@ TRANSCRIPT_STRUCT = StructType(
     ]
 )
 
-_COLS = [f.name for f in TRANSCRIPT_STRUCT.fields]
-
 
 def _canon(df: DataFrame) -> DataFrame:
     """Project to the declared schema (order + exact types)."""

@@ -29,19 +29,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from text_ocr_spark.pipeline import SALT_BUCKETS, extract_transcripts
-
-TRANSCRIPT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, tool string, "
-    "ts timestamp"
-)
+from text_ocr_spark.pipeline import extract_transcripts
+from text_ocr_spark.sources import TRANSCRIPT_STRUCT
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Unbounded transcript source (file stream; swap for
     ``readStream.format('iceberg')`` incremental scan on a catalog)."""
     return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        spark.readStream.schema(TRANSCRIPT_STRUCT)
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
@@ -53,7 +49,6 @@ def stream_extract(
     out_dir: str,
     checkpoint_dir: str,
     *,
-    salt_buckets: int = SALT_BUCKETS,
     num_partitions: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
@@ -65,10 +60,8 @@ def stream_extract(
     """
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        out = extract_transcripts(
-            batch_df, salt_buckets=salt_buckets, num_partitions=num_partitions
-        ).withColumn("epoch_id", F.lit(epoch_id))
-        write_epoch(out, out_dir)
+        out = extract_transcripts(batch_df, num_partitions=num_partitions)
+        write_epoch(out.withColumn("epoch_id", F.lit(epoch_id)), out_dir)
 
     writer = (
         read_transcript_stream(spark, input_dir)
